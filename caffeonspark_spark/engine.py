@@ -5,25 +5,39 @@ Replaces the reference's ``Config.scala`` (CLI-knob soup at
 small dataclass of the knobs that still make sense for a Spark-native engine,
 and the reference's hand-rolled SparkConf setup (``CaffeOnSpark.scala:27-34``)
 with an idiomatic SparkSession builder: AQE on, Arrow on, UTC session
-timezone (required for oracle comparison), shuffle partitions sized to cores
-rather than the 200 default.
+timezone (required for oracle comparison), shuffle partitions sized to the
+session's cores rather than the 200 default.
+
+Shuffle width (``Config.shuffle_width``): an explicit
+``Config.shuffle_partitions`` wins; otherwise the master decides —
+``local`` → 1, ``local[N]`` / ``local[N,F]`` → N, ``local[*]`` →
+``os.cpu_count()``, and any cluster master → 32. The local rule matters
+most for stateful streams, whose state-store width is this value, is never
+coalesced by AQE, and is frozen into the checkpoint when the query first
+starts (``streaming.windows``): a fixed 32 on a 4-core session meant 32
+state-store tasks, each committing its own state files, every micro-batch.
 
 Scale note: every default here is chosen to survive a 1000-executor / 100 TB
-deployment — AQE handles skew + partition coalescing at runtime, shuffle
-partition count is only a *local* override (on a real cluster AQE's
-``advisoryPartitionSizeInBytes`` governs), and nothing below pins
-local-mode-only behavior into query plans.
+deployment — AQE handles skew + partition coalescing at runtime, the
+cluster width of 32 is only a starting point (AQE's
+``advisoryPartitionSizeInBytes`` governs batch shuffles), and nothing below
+pins local-mode-only behavior into query plans.
 """
 
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
+
+#: shuffle width for a non-local master, where AQE coalesces batch shuffles
+CLUSTER_SHUFFLE_PARTITIONS = 32
+_LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?")
 
 
 @dataclass
@@ -38,7 +52,8 @@ class Config:
 
     master: str = field(default_factory=lambda: f"local[{DEFAULT_CPUS}]")
     app_name: str = "caffeonspark_spark"
-    shuffle_partitions: int = 32
+    # None → derived from ``master`` (see ``shuffle_width``)
+    shuffle_partitions: int | None = None
     # input/output (reference: -train/-test/-features/-output/-outputFormat)
     input_format: str = "parquet"
     output_format: str = "parquet"
@@ -55,6 +70,18 @@ class Config:
     open_cost_bytes: str = "4m"
     extra_conf: dict[str, str] = field(default_factory=dict)
 
+    def shuffle_width(self) -> int:
+        """``spark.sql.shuffle.partitions`` for this config: the explicit
+        ``shuffle_partitions`` if set, else one partition per core of a
+        local master, else ``CLUSTER_SHUFFLE_PARTITIONS``."""
+        if self.shuffle_partitions is not None:
+            return self.shuffle_partitions
+        m = _LOCAL_MASTER.fullmatch(self.master)
+        if m is None:
+            return CLUSTER_SHUFFLE_PARTITIONS
+        cores = m.group(1) or "1"
+        return (os.cpu_count() or 1) if cores == "*" else int(cores)
+
 
 def get_spark(config: Config | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
@@ -69,7 +96,7 @@ def get_spark(config: Config | None = None) -> SparkSession:
     builder = (
         SparkSession.builder.master(config.master)
         .appName(config.app_name)
-        .config("spark.sql.shuffle.partitions", str(config.shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(config.shuffle_width()))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

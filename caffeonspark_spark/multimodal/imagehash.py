@@ -310,7 +310,7 @@ def _chunk_fold(chunk_col: Column) -> Column:
     return char_fold_vec(chunk_col)
 
 
-def portable_image_bands(rs: list[Column]) -> list[Column]:
+def portable_image_bands(rs: list[str]) -> list[Column]:
     """The portable pixel matrix + dHash over MATERIALIZED row seeds:
     pixel(i, j) = (r_i · (j+1) + i) mod 256; dHash bit at (i, j) iff
     pixel(i, j) < pixel(i, j+1); band k packs rows 2k, 2k+1.
@@ -334,7 +334,14 @@ def portable_image_bands(rs: list[Column]) -> list[Column]:
     the video_dedup_map construction was this function's socket chatter).
     Arithmetic is unchanged term for term: pmod(r·(j+1)+i, 256)
     comparisons, bit·2^t terms summed as longs — long addition is exact,
-    so the value is bit-identical (oracles re-checked)."""
+    so the value is bit-identical (oracles re-checked). The names are
+    spliced into SQL text, so anything but a plain identifier is refused
+    here, at call time, rather than as a parse error inside ``F.expr``."""
+    for r in rs:
+        if not (isinstance(r, str) and r.isidentifier()):
+            raise TypeError(
+                f"portable_image_bands takes column names (plain identifiers), got {r!r}"
+            )
 
     def pix(r: str, i: int, j: int) -> str:
         return f"pmod({r} * {j + 1} + {i}, 256)"

@@ -163,12 +163,24 @@ def _narrow_view(df: DataFrame) -> DataFrame | None:
     (the front-end compute wants the parallelism) but wrong for READING a
     metadata-sized result: every downstream stage schedules one near-empty
     task per build partition (profiled on video_dedup_map: 32-task stages
-    with 0.2-0.8 s of TOTAL task work each). AQE cannot re-coalesce a
-    cached relation (``canChangeCachedPlanOutputPartitioning`` default), so
-    derive the READ width from the pin's own MATERIALIZED byte size — the
-    measurement the eager fill already paid for — at the same bytes-per-
-    partition target AQE uses for shuffles. Corpus-sized pins keep full
-    width (bytes/64 MB ≥ build width); only metadata-sized pins narrow.
+    with 0.2-0.8 s of TOTAL task work each). So derive the READ width from
+    the pin's own MATERIALIZED byte size — the measurement the eager fill
+    already paid for — at the same bytes-per-partition target AQE uses for
+    shuffles. Corpus-sized pins keep full width (bytes/64 MB ≥ build
+    width); only metadata-sized pins narrow.
+
+    Which width is probed: the engine sets
+    ``canChangeCachedPlanOutputPartitioning=true``, so AQE may coalesce
+    the fill's last shuffle and the cached blocks can be fewer than the
+    build plan's partitions. The probe still reads the FINALIZED width.
+    The memo key touches only the analyzed plan, so the pin frame is
+    first planned after ``persist()``: its executed plan is an
+    ``InMemoryTableScan`` over the filled relation, whose initial-plan
+    partition count is the cached RDD's — already built by the fill, so
+    reading it is driver metadata. Only a frame planned BEFORE it was
+    pinned reports the build plan's pre-AQE width; coalescing only merges
+    partitions, so that is an upper bound, and ``coalesce(want)`` over
+    blocks already at or under ``want`` is a no-op narrow dependency.
     Returns a coalesce VIEW over the cached blocks (no second
     materialization, no shuffle — the single read task fetches local cache
     blocks), or None when the pin should keep its build width."""

@@ -12,6 +12,14 @@ Scale posture: every query here is incremental — state is bounded by the
 watermark horizon; at 100 TB/day the same plans run against Kafka sources
 with checkpointing to object storage (swap ``read_events_stream`` for
 ``spark.readStream.format("kafka")`` + the identical transformations).
+
+State width: every stateful operator here keeps its state in
+``spark.sql.shuffle.partitions`` state-store partitions, one task each per
+micro-batch, and AQE never coalesces them. The width is taken from the
+session when a query first starts — the engine sizes it to the session's
+cores locally (``Config.shuffle_width``) — and Spark records it in the
+checkpoint's offset log, so a restart from that checkpoint keeps the
+original width whatever the restarting session says.
 """
 
 from __future__ import annotations

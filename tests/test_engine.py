@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -53,3 +55,21 @@ def test_requires_catalog():
     e.sf_dir = None
     with pytest.raises(RuntimeError, match="attach_catalog"):
         e.table("lineitem")
+
+
+@pytest.mark.parametrize(
+    "master, explicit, want",
+    [
+        ("local", None, 1),
+        ("local[4]", None, 4),
+        ("local[2,3]", None, 2),
+        ("local[*]", None, os.cpu_count()),
+        ("local[4]", 8, 8),
+        ("spark://h:7077", None, 32),
+    ],
+)
+def test_shuffle_width_follows_master(master, explicit, want):
+    """Shuffle width rule: one partition per core of a local master, 32 on
+    a cluster (AQE coalesces there), an explicit value always wins. Builds
+    Config objects only — no session is started."""
+    assert Config(master=master, shuffle_partitions=explicit).shuffle_width() == want

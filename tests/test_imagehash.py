@@ -185,6 +185,22 @@ def test_bad_method_rejected(spark):
         image_perceptual_hashes(df, method="ahash")
 
 
+def test_portable_image_bands_rejects_non_names(spark):
+    """Band seeds are spliced into SQL text, so only plain column names are
+    accepted: a Column or an expression string fails at call time with a
+    TypeError, not later as a SQL parse error."""
+    from pyspark.sql import functions as F
+
+    from caffeonspark_spark.multimodal.imagehash import portable_image_bands
+
+    names = [f"r{i}" for i in range(8)]
+    assert len(portable_image_bands(names)) == 4
+    with pytest.raises(TypeError, match="column names"):
+        portable_image_bands([F.col("r0")] + names[1:])
+    with pytest.raises(TypeError, match="column names"):
+        portable_image_bands(names[:7] + ["r7 + 1"])
+
+
 def test_image_dedup_end_to_end_clusters(spark):
     """The full image-dedup pipeline a corpus job runs: JPEG bytes →
     perceptual hashes → banded pairs → connected components (the text

@@ -187,6 +187,34 @@ def test_kmeans_assign_large_k_no_plan_bloat(spark, sf_oracle):
     assert row["centroid_id"] in range(50_000) and row["dist2"] >= 0.0
 
 
+def test_nearest_centroid_col_falls_back_on_non_numeric_elements(spark):
+    """Centroid elements that cannot be embedded as parsed double literals
+    (NaN, None) take the Column form instead of raising. A NaN centroid
+    never wins (NaN sorts above every distance), so the fallback must give
+    exactly the literal form's answer over the finite centroids. A None
+    element makes that centroid's distance NULL, as SQL arithmetic does,
+    and a NULL field sorts first in struct order, so every row reports
+    that centroid with a NULL distance — visible to the caller, not a
+    crash at plan-build time."""
+    from caffeonspark_spark.operators.similarity import nearest_centroid_col
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 1.0]), (1, [4.0, 5.0])], "id long, v array<double>"
+    )
+
+    def nearest(cent_rows):
+        col = nearest_centroid_col(cent_rows, "v").alias("s")
+        return [
+            (r["s"]["centroid_id"], r["s"]["dist2"])
+            for r in df.select("id", col).orderBy("id").collect()
+        ]
+
+    finite = [(0, [0.0, 0.0]), (1, [4.0, 4.0])]
+    assert nearest(finite) == [(0, 2.0), (1, 1.0)]
+    assert nearest(finite + [(2, [math.nan, 1.0])]) == [(0, 2.0), (1, 1.0)]
+    assert nearest(finite + [(2, [None, 1.0])]) == [(2, None), (2, None)]
+
+
 def test_kmeans_fit_matches_numpy_lloyds(spark, sf_smoke):
     """Two full Lloyd's rounds equal the straightforward numpy loop
     (assign to nearest of the k first vectors, mean-update, repeat)."""

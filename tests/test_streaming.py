@@ -182,6 +182,17 @@ def test_watermark_drops_late_data(spark, tmp_path):
     ).write.mode("append").parquet(src)
     q.processAllAvailable()
     q.stop()
+    # the drop is visible in the state metrics: the batch that carried the
+    # straggler (5 on-time rows + 1 late) reports it dropped, and every
+    # other batch — data or watermark-only — reports none
+    progress = [p for p in q.recentProgress if p["stateOperators"]]
+    assert [p["numInputRows"] for p in progress if p["numInputRows"]] == [20, 6, 5]
+    for p in progress:
+        dropped = p["stateOperators"][0]["numRowsDroppedByWatermark"]
+        if p["numInputRows"] == 6:
+            assert dropped > 0, p
+        else:
+            assert dropped == 0, p
     rows = spark.sql("SELECT * FROM late_out").collect()
     assert len(rows) > 0
     # the straggler's event_type never appears: it was dropped, not aggregated
@@ -244,6 +255,85 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
     assert got.count() == 17  # 10 + 7, no re-emission
     ids = sorted(r["event_id"] for r in got.collect())
     assert ids == sorted(list(range(10)) + list(range(100, 107)))
+
+
+def test_tumbling_parity_invariant_to_state_width(spark, sf_smoke):
+    """The tumbling stream's result must not depend on how many state-store
+    partitions hold its state: the session's shuffle width (which the
+    engine derives from the master's cores) at 1, 4 and 32 gives the
+    same rows."""
+    from caffeonspark_spark.streaming.windows import stream_tumbling_parity
+
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    results = {}
+    try:
+        for w in (1, 4, 32):
+            spark.conf.set("spark.sql.shuffle.partitions", str(w))
+            rows = stream_tumbling_parity(spark, sf_smoke).collect()
+            results[w] = sorted(rows, key=repr)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+    assert results[1]
+    assert results[1] == results[4] == results[32]
+
+
+def test_restart_keeps_checkpointed_state_width(spark, tmp_path):
+    """A stateful query's state width is fixed when it first starts:
+    restarted from its checkpoint in a session whose shuffle width has
+    changed (4 → 8), it still runs 4 state partitions, and the restored
+    state gives the same totals as one uninterrupted run."""
+    from caffeonspark_spark.streaming.windows import EVENTS_SCHEMA
+
+    src = str(tmp_path / "src")
+    chk = str(tmp_path / "chk")
+    base = 1_700_000_000 * 1_000_000_000
+
+    def rows(start_id, n):
+        return [
+            (start_id + i, base + i * 10**9, i % 3, ("click", "view")[i % 2], 1.0, "{}")
+            for i in range(n)
+        ]
+
+    def run(name):
+        stream = spark.readStream.schema(EVENTS_SCHEMA).format("parquet").load(src)
+        agg = stream.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("event_id").alias("ids")
+        )
+        q = (
+            agg.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", chk)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        last = [p for p in q.recentProgress if p["numInputRows"]][-1]
+        return last["stateOperators"][0]["numShufflePartitions"]
+
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        spark.createDataFrame(rows(0, 10), EVENTS_SCHEMA).write.mode("overwrite").parquet(src)
+        assert run("width_first") == 4
+        spark.createDataFrame(rows(100, 7), EVENTS_SCHEMA).write.mode("append").parquet(src)
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        assert run("width_restart") == 4
+        got = sorted(
+            (r["event_type"], r["n"], r["ids"])
+            for r in spark.table("width_restart").collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+        for name in ("width_first", "width_restart"):
+            spark.catalog.dropTempView(name)
+    want = {}
+    for eid, _, _, etype, _, _ in rows(0, 10) + rows(100, 7):
+        n, ids = want.get(etype, (0, 0))
+        want[etype] = (n + 1, ids + eid)
+    assert got == sorted((k, n, ids) for k, (n, ids) in want.items())
 
 
 def test_session_window_parity_with_batch(spark, sf_smoke, events_stream):
